@@ -145,6 +145,16 @@ object Bench {
     */
   private[graft] def threshold(band: Double): Double = 2 * band
 
+  /** `path` with `tag` inserted before the extension of its basename, or
+    * appended when the basename has none — a dot in a directory name
+    * never takes the tag.
+    */
+  private[graft] def stampPath(path: String, tag: String): String = {
+    val dot = path.lastIndexOf('.')
+    if (dot > path.lastIndexOf('/') + 1) path.substring(0, dot) + tag + path.substring(dot)
+    else path + tag
+  }
+
   /** min-of-2 merge for one query's two pass rows: keep the surviving
     * reading when one pass failed (a one-sided GC pause or transient OOM
     * must not turn a measurable query into an error row); only a
@@ -536,11 +546,7 @@ object Bench {
     // run overwrote the 32-core close artifact — the close's per-query
     // numbers were unrecoverable. The full artifact is therefore ALSO
     // written to a cpus-stamped path that no other core count can clobber.
-    val cpuOutPath = {
-      val dot = outPath.lastIndexOf('.')
-      if (dot > 0) outPath.substring(0, dot) + "_c" + cpus + outPath.substring(dot)
-      else outPath + "_c" + cpus
-    }
+    val cpuOutPath = stampPath(outPath, "_c" + cpus)
     try {
       val w = new java.io.PrintWriter(cpuOutPath, "UTF-8")
       try w.println(json) finally w.close()
@@ -570,11 +576,11 @@ object Bench {
     val qvJs = results.map(_._2.fold("null")(t => num2(t).toString)).mkString("[", ",", "]")
     val compact =
       s"""{"metric":"total","value":${num(total)},"unit":"sec","corrected_total_sec":${num(correctedTotal)},""" +
-        s""""commit":"$commit","cpus":$cpus,"n_queries":${names.size},"n_failed":${results.count(_._3.isDefined)},""" +
+        s""""commit":"$commit","cpus":${cpus.toIntOption.fold("null")(_.toString)},"n_queries":${names.size},"n_failed":${results.count(_._3.isDefined)},""" +
         s""""suspect_contamination":$suspectContamination,"compact":true,"full_artifact":"$cpuOutPath",""" +
         s""""qn_sha256":"$qnHash","qv":$qvJs,"sf":"$sfDir"}"""
     try {
-      val w = new java.io.PrintWriter(cpuOutPath.replace(".json", "_summary.json"), "UTF-8")
+      val w = new java.io.PrintWriter(stampPath(cpuOutPath, "_summary"), "UTF-8")
       try w.println(compact) finally w.close()
     } catch {
       case scala.util.control.NonFatal(e) =>

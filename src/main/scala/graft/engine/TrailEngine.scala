@@ -1,7 +1,8 @@
 package graft.engine
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.encoders.RowEncoder
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -16,13 +17,12 @@ import graft.trck.LocalRunner.ForeachTuple
   * Physical shape (the plan that survives 100 TB):
   *
   *   scan (pruned to uuid + ts + program fields, filters pushed down)
-  *     → repartition(uuid)                 // the ONE shuffle
-  *     → sortWithinPartitions(uuid, ts, tiebreak…)
-  *     → mapPartitions: iterate consecutive same-uuid runs, one trail in
-  *       memory at a time (no per-group materialization of the partition),
-  *       run the foreach loop with the reference's N+1 skip optimizations,
-  *       finalize at MAX_TIMESTAMP inline (single-source ⇒ no cross-trail
-  *       state), emit compact yield rows
+  *     → sorted-group operator keyed by uuid, ordered by (src, ts,
+  *       tiebreak…): the planner adds the ONE shuffle and the sort only
+  *       when the input is not already laid out ([[TrailEngine.prepare]],
+  *       bucketed tables); one trail in memory at a time, the foreach loop
+  *       with the reference's N+1 skip optimizations, MAX_TIMESTAMP
+  *       finalization inline, compact yield rows out
   *     → groupBy(tuple, dst[, item]) aggregation — partial map-side combine
   *       makes the second shuffle O(distinct yields), not O(events)
   *
@@ -114,32 +114,28 @@ object TrailEngine {
       .unionByName(sentinel.withColumn("__ghost", lit(1)))
   }
 
-  /** Cluster + sort a trail events frame ONCE for repeated trail queries:
-    * `emits(..., prepared = true)` over the result skips its per-query
-    * shuffle+sort — the dominant cost of every trail query. Persist the
-    * result for within-session reuse, or write a durable layout with
-    * `prepare(df, …).repartition(n, col(uuidCol)).write.bucketBy(n, uuidCol)
-    * .sortBy(uuidCol, tsCol, tiebreak…).saveAsTable(t)` — the repartition
-    * must align with the bucket count so each bucket is ONE sorted file
-    * (multi-file buckets concatenate per-file sorted runs and break the
-    * contract) — and read back with
-    * `spark.sql.sources.bucketing.autoBucketedScan.enabled=false` so the
-    * scan keeps one-partition-per-bucket (validated end-to-end in
-    * EngineEquivalenceSpec's bucketed-table test).
-    *
-    * The guarantee emits needs is exactly: same-uuid rows contiguous per
-    * partition, ordered by (preOrder, ts, tiebreak) within each uuid run.
+  /** Cluster + sort a trail events frame ONCE for repeated trail queries.
+    * [[emits]] groups by the string-cast uuid and sorts each trail by
+    * (Long-cast src, ts as long, tiebreak…); this layout is clustered and
+    * sorted on exactly those expressions, so the Spark planner finds the
+    * distribution and ordering already satisfied and inserts no exchange or
+    * sort of its own — the per-query shuffle+sort, the dominant cost of
+    * every trail query, is paid once here. The planner adds them only when
+    * the input lacks them, so any frame stays correct, laid out or not.
+    * Persist the result for within-session reuse, or write a durable
+    * layout with `write.bucketBy(n, uuidCol)`: a bucketed scan satisfies
+    * the clustering (no exchange) and the planner sorts each bucket
+    * locally, however many files a bucket holds.
     *
     * The layout bakes in `__ghost` presence sentinels
     * ([[withPresenceSentinels]]): one zero-event row per trail (per source)
     * so downstream filters that empty a trail still leave its per-entry
     * loop and finalization running — the same empty-trail parity
-    * TrckSparkRunner maintains on the unprepared path, now durable in the
-    * layout (filters over a prepared frame keep `__ghost=1` rows;
-    * runRaw(prepared = true) does so automatically). For multi-source
-    * frames built by unionSources, pass `presence` from
-    * [[TrckSparkRunner.unionSourcesWithPresence]] so a source fully below
-    * its min_ts cut keeps its (uuid, src) sentinel.
+    * TrckSparkRunner maintains on a bare frame, now durable in the layout
+    * (filters over a layout must keep `__ghost=1` rows; runRaw does so
+    * automatically). For multi-source frames built by unionSources, pass
+    * `presence` from [[TrckSparkRunner.unionSourcesWithPresence]] so a
+    * source fully below its min_ts cut keeps its (uuid, src) sentinel.
     */
   def prepare(
       events: DataFrame,
@@ -152,15 +148,12 @@ object TrailEngine {
     val withGhosts =
       if (events.columns.contains("__ghost")) events // already sentinel-bearing
       else withPresenceSentinels(events, presence.getOrElse(events), uuidCol, tsCol, srcCol)
+    val uuid = col(uuidCol).cast(StringType)
     withGhosts
-      .repartition(col(uuidCol))
-      // sort on the SAME cast values emits sorts on — raw-typed string
-      // timestamps or src indices would order lexically ("1000" < "999")
-      // and prepared=true would silently trust the wrong order
+      .repartition(uuid)
       .sortWithinPartitions(
-        col(uuidCol) +:
-          (srcCol.map(c => col(c).cast(LongType)).toSeq ++
-            (graft.Tables.tsLong(withGhosts, tsCol) +: tiebreak.map(col))): _*)
+        uuid +: (srcCol.map(c => col(c).cast(LongType)).toSeq ++
+          (graft.Tables.tsLong(withGhosts, tsCol) +: tiebreak.map(col))): _*)
   }
 
   /** Run `prog` over `events`, which must contain `uuidCol`, `tsCol`
@@ -168,6 +161,13 @@ object TrailEngine {
     * columns read as ""). Extra columns participate in consecutive-dup
     * elision only (reference semantics: dedup compares the full event).
     * `tiebreak` columns complete the per-trail event order under equal ts.
+    *
+    * Each trail is one group of a sorted-group operator keyed by the uuid:
+    * the planner clusters and sorts the input only where it is not already
+    * laid out (see [[prepare]]), and one pass per trail streams its rows,
+    * skips `__ghost` sentinels, elides consecutive dups per source segment,
+    * then replays each segment per window entry
+    * ([[TrailMatcher.replaySegment]]) and finalizes once per cookie.
     */
   def emits(
       prog: CompiledProgram,
@@ -197,16 +197,9 @@ object TrailEngine {
         */
       srcCol: Option[String] = None,
       srcCuts: Array[Long] = Array.empty,
-      /** true ⇒ `events` is already uuid-clustered and (uuid, src, ts,
-        * tiebreak)-sorted within partitions (via [[prepare]] or an
-        * equivalent bucketed layout) — the per-query shuffle+sort is
-        * skipped entirely. Correctness depends on the caller's guarantee.
-        * [[prepare]] layouts bake in `__ghost` presence sentinels, so
-        * empty-trail parity (a listed cookie filtered to zero events still
-        * runs its per-entry loop + finalization) holds on the prepared
-        * path too — provided filters applied between prepare and emits
-        * keep `__ghost=1` rows (runRaw(prepared = true) does, and rejects
-        * sentinel-less hand-rolled layouts when the program needs them).
+      /** ignored: the planner decides whether `events` still needs
+        * clustering and sorting (see [[prepare]]); kept so existing callers
+        * compile.
         */
       prepared: Boolean = false,
   ): DataFrame = {
@@ -249,23 +242,8 @@ object TrailEngine {
         srcSel) ++
         dedupCols.map(c => col(c).cast(StringType).as(c)) ++ tbSel ++ ghostSel: _*
     )
-
-    // r21 note: an explicit-count repartition here (to defeat AQE's
-    // coalesce-to-one at bench scale, the sessions()/asOfJoin fix) was
-    // TRIED and measured SLOWER for the FSM family — m1_fsm_count
-    // 0.38→0.50, g1_fsm_foreach 0.38→0.65, m2 0.40→0.55 at sf0.1: the
-    // per-task FSM setup (broadcast tuple tables, window maps) times the
-    // task count exceeds the single-task matching cost at bench scale,
-    // unlike the window kernels where per-row work dominates. Reverted;
-    // the AQE-coalescible exchange stands.
-    val sorted =
-      if (prepared) projected // layout guaranteed by the caller — no shuffle
-      else
-        projected
-          .repartition(col("__uuid"))
-          .sortWithinPartitions(
-            col("__uuid") +: (srcSel.map(_ => col("__srcord")) ++
-              (col("__ts") +: tiebreak.indices.map(i => col(s"__tb$i")))): _*)
+    val trailOrder: Seq[Column] = srcSel.map(_ => col("__srcord")) ++
+      (col("__ts") +: tiebreak.indices.map(i => col(s"__tb$i")))
 
     val hasSrc = srcCol.isDefined
     val fieldBase = 2 + (if (hasSrc) 1 else 0)
@@ -283,37 +261,33 @@ object TrailEngine {
     val tuplesB = spark.sparkContext.broadcast(tuples)
     val winB = spark.sparkContext.broadcast(winByCookie)
     val cutsB = spark.sparkContext.broadcast(srcCuts)
-    val enc = RowEncoder.encoderFor(emitSchema)
 
-    val emitted = sorted.mapPartitions { rows =>
-      val ts = tuplesB.value
-      val winMap = winB.value
-      val cuts = cutsB.value
-      new Iterator[Row] {
-        private val buf = scala.collection.mutable.ArrayBuffer[Row]()
-        private var bufPos = 0
-        private var pending: Row = null // first row of next trail
+    def rowField(r: Row, i: Int): String = {
+      val v = r.get(i); if (v == null) "" else v.toString
+    }
 
-        private def rowField(r: Row, i: Int): String = {
-          val v = r.get(i); if (v == null) "" else v.toString
+    projected
+      .groupBy(col("__uuid"))
+      .as[String, Row](Encoders.STRING, Encoders.row(projected.schema))
+      .flatMapSortedGroups(trailOrder: _*) { (uuid: String, rows: Iterator[Row]) =>
+        val ts = tuplesB.value
+        val cuts = cutsB.value
+        val entriesOpt: Option[IndexedSeq[LocalRunner.WindowEntry]] = winB.value match {
+          case Some(m) => m.get(uuid) // unlisted trails drop
+          case None    => Some(IndexedSeq(LocalRunner.WindowEntry(uuid, uuid, 0L, 0L)))
         }
-
-        /** Fast path for the common case (no windows, single source): one
-          * streaming pass with inline consecutive-dup elision — no per-row
-          * dedup-value buffering (measurably faster on the 20M-event perf
-          * fixture).
-          */
-        private def processNextTrailSimple(first: Row, uuid: String): Unit = {
-          val evs = scala.collection.mutable.ArrayBuffer[TrailEvent]()
+        if (entriesOpt.isEmpty) Iterator.empty
+        else {
+          // one pass over the trail: source segments in replay order, each
+          // with its own consecutive-dup elision; a sentinel-only segment
+          // still runs (empty) so its per-entry loop stays observable
+          val segs = ArrayBuffer[(Long, ArrayBuffer[TrailEvent])]()
           var prev: Row = null
-          var cur = first
-          var done = false
-          while (!done && cur != null) {
-            if (cur.getString(0) != uuid) { pending = cur; done = true }
-            else if (ghostIdx >= 0 && cur.getInt(ghostIdx) == 1) {
-              // presence sentinel: establishes the trail, contributes no event
-              cur = if (rows.hasNext) rows.next() else null
-            } else {
+          while (rows.hasNext) {
+            val cur = rows.next()
+            val src = if (hasSrc) cur.getLong(2) else 0L
+            if (segs.isEmpty || segs.last._1 != src) { segs += ((src, ArrayBuffer())); prev = null }
+            if (ghostIdx < 0 || cur.getInt(ghostIdx) != 1) {
               val dup = prev != null && prev.getLong(1) == cur.getLong(1) && {
                 var i = fieldBase; var same = true
                 while (same && i < fieldBase + nDedup) { same = rowField(prev, i) == rowField(cur, i); i += 1 }
@@ -326,106 +300,41 @@ object TrailEngine {
                   arr(i) = if (fieldIdxInRow(i) == -1) "" else rowField(cur, fieldIdxInRow(i))
                   i += 1
                 }
-                evs += new TrailEvent(cur.getLong(1), arr)
+                segs.last._2 += new TrailEvent(cur.getLong(1), arr)
                 prev = cur
               }
-              cur = if (rows.hasNext) rows.next() else null
             }
           }
+
+          val buf = ArrayBuffer[Row]()
+          def emitAs(ctxCookie: String)(j: Int, r: Results): Unit = {
+            // O(1) skip for identity results: a wide foreach broadcasts one
+            // scratch to thousands of absent-value tuples that yielded
+            // nothing — iterating four empty/zero maps per tuple was
+            // measurable at 10k-tuple cardinality
+            if (!r.touched) return
+            r.counters.foreach { case (d, v) =>
+              if (v != 0) buf += Row(ctxCookie, j, "c", d, null, v)
+            }
+            r.sets.foreach { case (d, m) =>
+              m.foreach { case (t, c) => buf += Row(ctxCookie, j, "s", d, t, c) }
+            }
+            r.msets.foreach { case (d, m) =>
+              m.foreach { case (t, c) => buf += Row(ctxCookie, j, "m", d, t, c) }
+            }
+            r.hlls.foreach { case (d, h) =>
+              // emit the trail-local sketch registers; merged upstream
+              buf += Row(ctxCookie, j, "h", d, h.registers, 1L)
+            }
+          }
+
           // ONE shared initial state for all tuples: processTrail never
           // mutates saved entries (runOne copies first) and groups aliases
           // with an identity fast path — per-tuple initial allocation was
           // pure overhead at wide foreach cardinalities
           val init = FsmState.initial(prog)
-          val saved = Array.fill(ts.length)(init)
-          val out = TrailMatcher.processTrail(
-            prog, ts, saved, evs.toArray, uuid, 0L, 0L, params, fcalls, emitAs(uuid))
-          TrailMatcher.finalizeTrail(prog, ts, out, uuid, params, fcalls, emitAs(uuid))
-        }
-
-        private def emitAs(ctxCookie: String)(j: Int, r: Results): Unit = {
-          // O(1) skip for identity results: a wide foreach broadcasts one
-          // scratch to thousands of absent-value tuples that yielded
-          // nothing — iterating four empty/zero maps per tuple was
-          // measurable at 10k-tuple cardinality
-          if (!r.touched) return
-          r.counters.foreach { case (d, v) =>
-            if (v != 0) buf += Row(ctxCookie, j, "c", d, null, v)
-          }
-          r.sets.foreach { case (d, m) =>
-            m.foreach { case (t, c) => buf += Row(ctxCookie, j, "s", d, t, c) }
-          }
-          r.msets.foreach { case (d, m) =>
-            m.foreach { case (t, c) => buf += Row(ctxCookie, j, "m", d, t, c) }
-          }
-          r.hlls.foreach { case (d, h) =>
-            // emit the trail-local sketch registers; merged upstream
-            buf += Row(ctxCookie, j, "h", d, h.registers, 1L)
-          }
-        }
-
-        private def processNextTrail(): Unit = {
-          buf.clear(); bufPos = 0
-          var first = pending
-          if (first == null && rows.hasNext) first = rows.next()
-          if (first == null) return
-          pending = null
-          val uuid = first.getString(0)
-          if (winMap.isEmpty && !hasSrc) { processNextTrailSimple(first, uuid); return }
-
-          // general path: buffer the whole trail (consecutive same-uuid
-          // rows): timestamps, source index, program fields, dedup-compare
-          // values. Dedup runs per (source, window-entry) pass below, like
-          // the reference's per-ctx trail reads.
-          val tsArr = scala.collection.mutable.ArrayBuffer[Long]()
-          val srcArr = scala.collection.mutable.ArrayBuffer[Long]()
-          val ghostArr = scala.collection.mutable.ArrayBuffer[Boolean]()
-          val fieldRows = scala.collection.mutable.ArrayBuffer[Array[String]]()
-          val dedupRows = scala.collection.mutable.ArrayBuffer[Array[String]]()
-          var cur = first
-          var done = false
-          while (!done && cur != null) {
-            if (cur.getString(0) != uuid) { pending = cur; done = true }
-            else {
-              ghostArr += (ghostIdx >= 0 && cur.getInt(ghostIdx) == 1)
-              tsArr += cur.getLong(1)
-              srcArr += (if (hasSrc) cur.getLong(2) else 0L)
-              val fa = new Array[String](fieldIdxInRow.length)
-              var i = 0
-              while (i < fa.length) {
-                fa(i) = if (fieldIdxInRow(i) == -1) "" else rowField(cur, fieldIdxInRow(i))
-                i += 1
-              }
-              fieldRows += fa
-              val da = new Array[String](nDedup)
-              i = 0
-              while (i < nDedup) { da(i) = rowField(cur, fieldBase + i); i += 1 }
-              dedupRows += da
-              cur = if (rows.hasNext) rows.next() else null
-            }
-          }
-          val n = tsArr.length
-
-          val entriesOpt: Option[IndexedSeq[LocalRunner.WindowEntry]] = winMap match {
-            case Some(m) => m.get(uuid) // unlisted trails drop
-            case None    => Some(IndexedSeq(LocalRunner.WindowEntry(uuid, uuid, 0L, 0L)))
-          }
-          if (entriesOpt.isEmpty) return
-          val entries = entriesOpt.get
-
-          // per-source segments in replay order; per segment, every window
-          // entry runs from the state the previous source left and the LAST
-          // entry's output carries (LocalRunner dbStates overwrite)
-          var carried = {
-            // one shared initial state — see processNextTrailSimple
-            val init = FsmState.initial(prog)
-            Array.fill(ts.length)(init)
-          }
-          var segLo = 0
-          while (segLo < n) {
-            val src = srcArr(segLo)
-            var segHi = segLo
-            while (segHi < n && srcArr(segHi) == src) segHi += 1
+          var carried = Array.fill(ts.length)(init)
+          for ((src, seg) <- segs) {
             // single-source runs carry no cuts (src tag 0, cuts empty); a
             // TAGGED source beyond the cuts array means the caller lost the
             // unionSources cuts — silently treating it as uncut would
@@ -436,50 +345,16 @@ object TrailEngine {
               else throw new IllegalStateException(
                 s"source index $src has no min_ts cut (${cuts.length} cuts) — " +
                   "pass unionSources' cuts through srcCuts")
-
-            var lastOut = carried
-            var e = 0
-            while (e < entries.length) {
-              val entry = entries(e)
-              val ws = math.max(entry.start, cut)
-              val we = entry.end
-              // filter to the entry's bounds, then consecutive-dup elision
-              val evs = scala.collection.mutable.ArrayBuffer[TrailEvent]()
-              var prevIdx = -1
-              var i = segLo
-              while (i < segHi) {
-                val t = tsArr(i)
-                if (!ghostArr(i) && (ws == 0L || t >= ws) && (we == 0L || t < we)) {
-                  val dup = prevIdx >= 0 && tsArr(prevIdx) == t &&
-                    java.util.Arrays.equals(
-                      dedupRows(prevIdx).asInstanceOf[Array[AnyRef]],
-                      dedupRows(i).asInstanceOf[Array[AnyRef]])
-                  if (!dup) { evs += new TrailEvent(t, fieldRows(i)); prevIdx = i }
-                }
-                i += 1
-              }
-              lastOut = TrailMatcher.processTrail(
-                prog, ts, carried, evs.toArray, entry.id, ws, we, params, fcalls, emitAs(entry.id))
-              e += 1
-            }
-            carried = lastOut
-            segLo = segHi
+            carried = TrailMatcher.replaySegment(
+              prog, ts, carried, seg.toArray, entriesOpt.get, cut, params, fcalls, emitAs)
           }
           // one finalization per cookie, ctx = the real cookie
           // (reference: :899-944 iterates the cookie-keyed states map)
           TrailMatcher.finalizeTrail(prog, ts, carried, uuid, params, fcalls, emitAs(uuid))
+          buf.iterator
         }
-
-        override def hasNext: Boolean = {
-          while (bufPos >= buf.length && (pending != null || rows.hasNext))
-            processNextTrail()
-          bufPos < buf.length
-        }
-        override def next(): Row = { val r = buf(bufPos); bufPos += 1; r }
-      }
-    }(enc)
-
-    emitted
+      }(Encoders.row(emitSchema))
+      .toDF()
   }
 
   /** Counter results as a DataFrame: (tuple vars…, dst, value), summed

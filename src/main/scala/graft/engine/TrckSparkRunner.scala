@@ -154,10 +154,9 @@ object TrckSparkRunner {
       lexiconEvents: Option[DataFrame] = None,
       srcCuts: Array[Long] = Array.empty,
       presence: Option[DataFrame] = None,
-      prepared: Boolean = false,
   ): Vector[mutable.LinkedHashMap[String, Any]] =
     runRaw(prog, events, uuidCol, tsCol, tiebreak, params, foreachTuples, filters, fcalls,
-      lexiconEvents, srcCuts, presence, prepared).toOutputs
+      lexiconEvents, srcCuts, presence).toOutputs
 
   /** [[runRaw]] with a full fcall module: initialize fires on the driver
     * before the query plan is built, finalize after the aggregated results
@@ -178,11 +177,10 @@ object TrckSparkRunner {
       lexiconEvents: Option[DataFrame] = None,
       srcCuts: Array[Long] = Array.empty,
       presence: Option[DataFrame] = None,
-      prepared: Boolean = false,
   ): LocalRunner.RunOutput = {
     module.onInitialize()
     try runRaw(prog, events, uuidCol, tsCol, tiebreak, params, foreachTuples, filters,
-      module.fcalls, lexiconEvents, srcCuts, presence, prepared)
+      module.fcalls, lexiconEvents, srcCuts, presence)
     finally module.onFinalize()
   }
 
@@ -214,13 +212,11 @@ object TrckSparkRunner {
         * last empty-trail gap (a source fully below its min_ts cut)
         */
       presence: Option[DataFrame] = None,
-      /** true ⇒ `events` is a [[TrailEngine.prepare]] layout (or an
-        * equivalent bucketed table): uuid-clustered, (uuid, src, ts,
-        * tiebreak)-sorted, `__ghost` sentinels baked in — the per-query
-        * shuffle+sort is skipped and sentinels come from the layout
-        * instead of a presence union. All filters here are
-        * order-preserving narrow ops (filter / broadcast joins), so the
-        * layout contract survives them.
+      /** ignored, as in [[TrailEngine.emits]]: a [[TrailEngine.prepare]]
+        * layout is recognized by the planner (its clustering and order
+        * survive the filters here, which are narrow ops and broadcast
+        * joins) and by its `__ghost` column; kept so existing callers
+        * compile.
         */
       prepared: Boolean = false,
   ): LocalRunner.RunOutput = {
@@ -228,15 +224,6 @@ object TrckSparkRunner {
     // CNF/bounds predicates are widened to keep __ghost rows, and the
     // sentinel-union below is skipped
     val hasGhostCol = events.columns.contains("__ghost")
-    require(
-      !prepared || hasGhostCol ||
-        (filters.windows.isEmpty && !TrailMatcher.emptyRunMutates(prog)),
-      "prepared layout lacks __ghost presence sentinels, but this run's " +
-        "empty-trail semantics are observable (window file, or the " +
-        "entrypoint chain mutates a fresh state): a listed cookie filtered " +
-        "to zero events would silently skip its per-entry loop — rebuild " +
-        "the layout with TrailEngine.prepare (it bakes sentinels in) or " +
-        "run unprepared")
     // exclude first (excluded trails must not even run empty), CNF second —
     // trail PRESENCE is judged pre-CNF, like the reference looking a cookie
     // up in the DB before filtering its events (src/match_traildb.c:513-524)
@@ -315,7 +302,6 @@ object TrckSparkRunner {
     val srcCol = if (events.columns.contains("__src")) Some("__src") else None
     require(srcCol.isEmpty || srcCuts.nonEmpty,
       "multi-source events (__src column) need the unionSources cuts passed as srcCuts")
-    val cuts = srcCuts
     // one aggregation pass per DECLARED yield family — most programs only
     // count, so they get a single job; the emit stream is cached only when
     // more than one family will traverse it
@@ -325,7 +311,7 @@ object TrckSparkRunner {
     val nPasses = Seq(needCounters, needSets, needHlls).count(identity)
     val em0 = TrailEngine
       .emits(prog, trailDf, uuidCol, tsCol, tiebreak, params, Some(tuples), fcalls,
-        winEntries, srcCol, cuts, prepared)
+        winEntries, srcCol, srcCuts)
     val em = if (nPasses > 1) em0.cache() else em0
 
     val nSlots = if (prog.mergeResults) 1 else tuples.length

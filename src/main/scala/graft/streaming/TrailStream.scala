@@ -192,40 +192,21 @@ object TrailStream {
           } else {
             val prev = state.getOption.getOrElse(
               TrailState(Array.fill(nTuples)(toData(FsmState.initial(prog))), 0L))
-            // micro-batch = "next DB": sort, apply the min_ts cut, dedup
-            val evs = rows.toArray.sortBy(_.ts)
-            val saved = prev.states.map(fromData(_, prog.nWindowRules))
-            val out = winByCookie match {
-              case Some(m) =>
-                // per-entry ctx loop, batch-engine semantics: every entry
-                // starts from the state the previous batch left; the LAST
-                // entry's output carries forward; the high-water cut folds
-                // into each entry's window start (LocalRunner's
-                // max(start, minTs)); dedup runs per entry on the
-                // bounds-filtered events, comparing the FULL event
-                val entries = m.getOrElse(uuid, IndexedSeq.empty)
-                var lastOut = saved
-                entries.foreach { entry =>
-                  val ws = math.max(entry.start, prev.maxTs)
-                  val we = entry.end
-                  val inBounds = evs.filter(e =>
-                    (ws == 0L || e.ts >= ws) && (we == 0L || e.ts < we))
-                  val trail = dedupConsecutiveIn(inBounds)
-                    .map(e => new TrailEvent(e.ts, e.fields))
-                  lastOut = TrailMatcher.processTrail(
-                    prog, tuples, saved, trail, entry.id, ws, we, params, fcalls, emit(entry.id))
-                }
-                lastOut
-              case None =>
-                val cut = evs.filter(e => prev.maxTs == 0L || e.ts >= prev.maxTs)
-                val trail = dedupConsecutiveIn(cut).map(e => new TrailEvent(e.ts, e.fields))
-                // wStart = the high-water cut, like LocalRunner's
-                // max(0, minTs): Y5 filter-start yields must render the cut,
-                // not 0, from the second micro-batch on
-                TrailMatcher.processTrail(
-                  prog, tuples, saved, trail, uuid, prev.maxTs, 0L, params, fcalls, emit(uuid))
+            // micro-batch = "next DB": sort, dedup, then the batch engine's
+            // per-entry replay with the high-water mark as the min_ts cut —
+            // every entry starts from the state the previous batch left, the
+            // LAST entry's output carries forward, and the cut folds into
+            // each ctx's window start (Y5 yields render it, not 0)
+            val trail = dedupConsecutiveIn(rows.toArray.sortBy(_.ts))
+              .map(e => new TrailEvent(e.ts, e.fields))
+            val entries = winByCookie match {
+              case Some(m) => m.getOrElse(uuid, IndexedSeq.empty)
+              case None    => IndexedSeq(LocalRunner.WindowEntry(uuid, uuid, 0L, 0L))
             }
-            val newMax = if (evs.isEmpty) prev.maxTs else math.max(prev.maxTs, evs.map(_.ts).max)
+            val saved = prev.states.map(fromData(_, prog.nWindowRules))
+            val out = TrailMatcher.replaySegment(
+              prog, tuples, saved, trail, entries, prev.maxTs, params, fcalls, emit)
+            val newMax = if (trail.isEmpty) prev.maxTs else math.max(prev.maxTs, trail.last.ts)
             state.update(TrailState(out.map(toData), newMax))
             if (eventTimeGapSec > 0)
               // fire when the watermark passes last-event + gap; clamp above

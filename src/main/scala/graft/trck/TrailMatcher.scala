@@ -18,8 +18,8 @@ import LocalRunner.ForeachTuple
   * for N distinct foreach values present in the trail
   * (reference: src/match_traildb.c:596-608).
   *
-  * Shared between LocalRunner (multi-DB semantics oracle) and the Spark
-  * engine (runs inside mapPartitions).
+  * Shared between LocalRunner (multi-DB semantics oracle), the Spark
+  * engine and TrailStream.
   */
 object TrailMatcher {
 
@@ -121,7 +121,10 @@ object TrailMatcher {
         onResult(j, scratch)
         var k = j + 1
         val end = j + n
-        var memo: (FsmState, Results) = null
+        // an absent-valued representative (the implicit sweep's leading
+        // "") already IS the run every absent tuple of the group shares:
+        // reuse it as the memo, or the group costs one call over N+1
+        var memo: (FsmState, Results) = if (dvOk && !tupleInTrail(j)) (st, scratch) else null
         while (k < end) {
           if (!dvOk || tupleInTrail(k)) {
             val (s2, r2, _) = runOne(k)
@@ -137,6 +140,40 @@ object TrailMatcher {
         }
         j = end
       }
+    }
+    out
+  }
+
+  /** Replay one source segment of a trail (its consecutive-dup-elided,
+    * ts-sorted events) once per window entry, like the reference's per-ctx
+    * trail reads (src/match_traildb.c:513-560): each entry runs from
+    * `carried` over the contiguous ts-slice `[max(start, cut), end)` (0 =
+    * unbounded) with its own ctx id and bounds, and the LAST entry's output
+    * states are returned. Eliding dups before the cut equals cutting first:
+    * dups share a ts, so a run of them is kept or dropped whole.
+    */
+  def replaySegment(
+      prog: CompiledProgram,
+      tuples: IndexedSeq[ForeachTuple],
+      carried: Array[FsmState],
+      events: Array[TrailEvent],
+      entries: IndexedSeq[LocalRunner.WindowEntry],
+      cut: Long,
+      params: Bindings,
+      fcalls: Map[String, Fcall],
+      onResult: String => (Int, Results) => Unit,
+  ): Array[FsmState] = {
+    var out = carried
+    for (entry <- entries) {
+      val ws = math.max(entry.start, cut)
+      val we = entry.end
+      var lo = 0
+      if (ws != 0L) while (lo < events.length && events(lo).ts < ws) lo += 1
+      var hi = events.length
+      if (we != 0L) while (hi > lo && events(hi - 1).ts >= we) hi -= 1
+      val slice =
+        if (lo == 0 && hi == events.length) events else java.util.Arrays.copyOfRange(events, lo, hi)
+      out = processTrail(prog, tuples, carried, slice, entry.id, ws, we, params, fcalls, onResult(entry.id))
     }
     out
   }

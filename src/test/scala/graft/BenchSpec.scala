@@ -71,6 +71,17 @@ class BenchSpec extends AnyFunSuite {
       == (("q", None, Some("A"))))
   }
 
+  test("stampPath tags the basename's extension, or appends without one") {
+    assert(Bench.stampPath("bench_out.json", "_c32") == "bench_out_c32.json")
+    assert(Bench.stampPath("bench_out_c32.json", "_summary") == "bench_out_c32_summary.json")
+    // no extension: the summary must not collide with the full artifact
+    assert(Bench.stampPath("benchout_c8", "_summary") == "benchout_c8_summary")
+    assert(Bench.stampPath("bench_out.txt", "_summary") == "bench_out_summary.txt")
+    // a dot in a directory component is not an extension
+    assert(Bench.stampPath("out.d/bench", "_c32") == "out.d/bench_c32")
+    assert(Bench.stampPath("out.d/bench.json", "_c32") == "out.d/bench_c32.json")
+  }
+
   test("suspect threshold: 2x band unconditionally - no sub-second blind spot") {
     // the old band+0.75s floor could never fire for bands < 0.75 s, which
     // is most of the registry; r13/r14/r17/r18 each shipped a >2x

@@ -152,6 +152,49 @@ class EngineEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "true")
   }
 
+  test("scrambled frame passed as prepared matches LocalRunner") {
+    // neither uuid-clustered nor trail-sorted: the planner, not the caller's
+    // flag, decides that the input still needs its exchange and sort
+    val prog = Compiled.compile(program)
+    val db = randomDb(31L, nTrails = 25, nEvents = 30)
+    val tuples = eids.map(e => ForeachTuple(Vector(Left(e)))).toVector
+    val local = LocalRunner.run(prog, Seq(db), foreachTuples = Some(tuples))
+    val scrambled = dbToDf(db).repartition(3, col("seq")).orderBy(desc("ts"))
+    val sparkOut = TrckSparkRunner.runRaw(
+      prog, scrambled, "uuid", "ts", Seq("seq"), foreachTuples = Some(tuples), prepared = true)
+    assert(sparkOut.toOutputs == local.toOutputs)
+  }
+
+  test("multi-file bucketed table under default autoBucketedScan matches LocalRunner") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val prog = Compiled.compile(program)
+    val db = randomDb(44L, nTrails = 30, nEvents = 25)
+    val tuples = eids.map(e => ForeachTuple(Vector(Left(e)))).toVector
+    val local = LocalRunner.run(prog, Seq(db), foreachTuples = Some(tuples))
+    // write tasks split every trail, so each bucket holds several unsorted files
+    spark.conf.unset("spark.sql.sources.bucketing.autoBucketedScan.enabled")
+    spark.sql("DROP TABLE IF EXISTS trails_multifile")
+    dbToDf(db).repartition(3, col("seq")).sortWithinPartitions(rand(5L))
+      .write.bucketBy(4, "uuid").mode("overwrite").saveAsTable("trails_multifile")
+    try {
+      val table = spark.table("trails_multifile")
+      assert(table.inputFiles.length > 4, "sanity: several files per bucket")
+      val sparkOut = TrckSparkRunner.runRaw(
+        prog, table, "uuid", "ts", Seq("seq"), foreachTuples = Some(tuples), prepared = true)
+      assert(sparkOut.toOutputs == local.toOutputs)
+      spark.conf.set("spark.sql.adaptive.enabled", "false")
+      try {
+        val plan = TrailEngine.emits(
+          prog, table, "uuid", "ts", Seq("seq"), foreachTuples = Some(tuples), prepared = true)
+          .queryExecution.executedPlan
+        val shuffles = plan.collect { case e: ShuffleExchangeExec => e }
+        assert(shuffles.isEmpty, s"unexpected shuffles: $shuffles")
+        assert(plan.collect { case f: FileSourceScanExec => f.bucketedScan } == Seq(true))
+      } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    } finally spark.sql("DROP TABLE IF EXISTS trails_multifile")
+  }
+
   test("multi-source runs: min_ts cut + cross-DB state carry, Spark = local") {
     val prog = Compiled.compile(program)
     val db1 = randomDb(11L, nTrails = 20, nEvents = 25)

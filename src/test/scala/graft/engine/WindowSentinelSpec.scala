@@ -253,19 +253,18 @@ class WindowSentinelSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("prepared layout without sentinels is rejected when empty-trail semantics matter") {
+  test("bare sentinel-less layout: window run matches LocalRunner") {
     val prog = Compiled.compile(nestedWindowProgram)
-    val df = dbToDf(Db(Seq("u1" -> Seq(RawEvent(500L, Map("type" -> "x"))))))
-    // hand-rolled layout, no __ghost column — the pre-fix footgun
-    val bare = df.repartition(org.apache.spark.sql.functions.col("uuid"))
+    val db = Db(Seq("u1" -> Seq(RawEvent(500L, Map("type" -> "x")))))
+    // hand-rolled layout, no __ghost column: runRaw derives the sentinels
+    val bare = dbToDf(db).repartition(org.apache.spark.sql.functions.col("uuid"))
       .sortWithinPartitions("uuid", "ts", "seq")
     val ws = LocalRunner.WindowSet(Seq(LocalRunner.WindowEntry("u1", "u1", 100L, 1000L)))
-    val e = intercept[IllegalArgumentException] {
-      TrckSparkRunner.runRaw(
-        prog, bare, "uuid", "ts", Seq("seq"),
-        filters = TrckSparkRunner.EngineFilters(windows = Some(ws)), prepared = true)
-    }
-    assert(e.getMessage.contains("__ghost"))
+    val local = LocalRunner.run(prog, Seq(db), windows = Some(ws))
+    val engine = TrckSparkRunner.runRaw(
+      prog, bare, "uuid", "ts", Seq("seq"),
+      filters = TrckSparkRunner.EngineFilters(windows = Some(ws)), prepared = true)
+    assert(render(engine) == render(local))
   }
 
   test("multi-source window run keeps per-source presence for empty segments") {
