@@ -124,7 +124,7 @@ object TrailMatcher {
         // an absent-valued representative (the implicit sweep's leading
         // "") already IS the run every absent tuple of the group shares:
         // reuse it as the memo, or the group costs one call over N+1
-        var memo: (FsmState, Results) = if (dvOk && !tupleInTrail(j)) (st, scratch) else null
+        var memo: (FsmState, Results) = if (n > 1 && dvOk && !tupleInTrail(j)) (st, scratch) else null
         while (k < end) {
           if (!dvOk || tupleInTrail(k)) {
             val (s2, r2, _) = runOne(k)
