@@ -23,8 +23,9 @@ import graft.trck.LocalRunner.ForeachTuple
   *       bucketed tables); one trail in memory at a time, the foreach loop
   *       with the reference's N+1 skip optimizations, MAX_TIMESTAMP
   *       finalization inline, compact yield rows out
-  *     → groupBy(tuple, dst[, item]) aggregation — partial map-side combine
-  *       makes the second shuffle O(distinct yields), not O(events)
+  *     → [[TrailEngine.fold]]: one groupBy(tuple, kind, dst, item)
+  *       aggregation — partial map-side combine makes the second shuffle
+  *       O(distinct yields), not O(events)
   *
   * State never outlives one trail iterator step, so executor memory is
   * O(longest trail + tuple count), independent of partition size — the
@@ -72,8 +73,30 @@ object TrailEngine {
       .toVector
   }
 
-  /** Emitted row schema: one row per (trail × tuple × yield-item). */
-  private val emitSchema = StructType(Seq(
+  /** Foreach tuples of a run: the one empty tuple without a groupby, the
+    * caller's explicit tuples, or the implicit sweep of the groupby var's
+    * field over `lexicon`, "" first (reference:
+    * src/match_traildb.c:188-236).
+    */
+  private[engine] def resolveTuples(
+      prog: CompiledProgram,
+      foreachTuples: Option[Vector[ForeachTuple]],
+      lexicon: DataFrame,
+  ): Vector[ForeachTuple] =
+    if (prog.groupbyVars.isEmpty) Vector(ForeachTuple(Vector.empty))
+    else
+      foreachTuples.getOrElse {
+        require(prog.groupbyVars.size == 1, "implicit foreach requires exactly one var")
+        val field = prog.varFields(prog.groupbyVars.head)
+        ("" +: lexiconSweep(lexicon, field)).map(v => ForeachTuple(Vector(Left(v))))
+      }
+
+  /** Emit-row schema, the one wire format between the trail matchers
+    * ([[emits]], TrailStream) and [[fold]]: one row per (ctx id × tuple ×
+    * yield item). `uuid` is the result ctx id — the window entry id inside
+    * an entry's run, the cookie otherwise.
+    */
+  private[graft] val emitSchema: StructType = StructType(Seq(
     StructField("uuid", StringType),
     StructField("tuple_idx", IntegerType),
     StructField("kind", StringType), // c / s / m / h
@@ -204,55 +227,10 @@ object TrailEngine {
       prepared: Boolean = false,
   ): DataFrame = {
     val spark = events.sparkSession
-
-    val tuples: Vector[ForeachTuple] =
-      if (prog.groupbyVars.isEmpty) Vector(ForeachTuple(Vector.empty))
-      else
-        foreachTuples.getOrElse {
-          // implicit foreach: lexicon sweep, "" first
-          // (reference: src/match_traildb.c:188-236)
-          require(prog.groupbyVars.size == 1, "implicit foreach requires exactly one var")
-          val field = prog.varFields(prog.groupbyVars.head)
-          ("" +: lexiconSweep(events, field)).map(v => ForeachTuple(Vector(Left(v))))
-        }
-
-    // prune to what the FSM needs; all extra columns only matter for dedup,
-    // which by reference semantics uses the full input row. The src column
-    // is projected separately AS A NUMBER (a string cast would order source
-    // 10 before 2) and does not join the dedup compare — per-source
-    // segmentation already prevents cross-boundary elision.
-    // "__ghost" marks zero-event sentinel rows (one per trail that exists
-    // in the source but lost every event to filters — see
-    // TrckSparkRunner.withSentinels): they assert the trail's presence per
-    // source so the per-entry loop and finalization still run, but are
-    // never materialized as events and never join the dedup compare.
-    val hasGhost = events.columns.contains("__ghost")
-    val reserved = (Seq(uuidCol, tsCol) ++ srcCol ++ (if (hasGhost) Seq("__ghost") else Nil)).toSet
-    val dedupCols = events.columns.filterNot(reserved).toSeq
-    val srcSel: Seq[Column] = srcCol.map(c => col(c).cast(LongType).as("__srcord")).toSeq
-    // tiebreak columns keep their ORIGINAL types in dedicated sort columns —
-    // the dedup projection below casts everything to string, and a numeric
-    // tiebreak sorted lexically would order "10" before "9" under equal ts
-    val tbSel: Seq[Column] = tiebreak.zipWithIndex.map { case (c, i) => col(c).as(s"__tb$i") }
-    val ghostSel: Seq[Column] =
-      if (hasGhost) Seq(col("__ghost").cast(IntegerType).as("__ghost")) else Nil
-    val projected = events.select(
-      (col(uuidCol).cast(StringType).as("__uuid") +:
-        graft.Tables.tsLong(events, tsCol).as("__ts") +:
-        srcSel) ++
-        dedupCols.map(c => col(c).cast(StringType).as(c)) ++ tbSel ++ ghostSel: _*
-    )
-    val trailOrder: Seq[Column] = srcSel.map(_ => col("__srcord")) ++
+    val tuples = resolveTuples(prog, foreachTuples, events)
+    val (projected, pass) = trailProjection(prog, events, uuidCol, tsCol, tiebreak, srcCol)
+    val trailOrder: Seq[Column] = srcCol.map(_ => col("__srcord")).toSeq ++
       (col("__ts") +: tiebreak.indices.map(i => col(s"__tb$i")))
-
-    val hasSrc = srcCol.isDefined
-    val fieldBase = 2 + (if (hasSrc) 1 else 0)
-    val fieldIdxInRow: Array[Int] = prog.fields.map { f =>
-      val i = dedupCols.indexOf(f)
-      if (i >= 0) i + fieldBase else -1
-    }
-    val nDedup = dedupCols.length
-    val ghostIdx = if (hasGhost) fieldBase + nDedup + tiebreak.length else -1
 
     // window entries per cookie, in window-file order
     val winByCookie: Option[Map[String, IndexedSeq[LocalRunner.WindowEntry]]] =
@@ -261,10 +239,6 @@ object TrailEngine {
     val tuplesB = spark.sparkContext.broadcast(tuples)
     val winB = spark.sparkContext.broadcast(winByCookie)
     val cutsB = spark.sparkContext.broadcast(srcCuts)
-
-    def rowField(r: Row, i: Int): String = {
-      val v = r.get(i); if (v == null) "" else v.toString
-    }
 
     projected
       .groupBy(col("__uuid"))
@@ -278,63 +252,14 @@ object TrailEngine {
         }
         if (entriesOpt.isEmpty) Iterator.empty
         else {
-          // one pass over the trail: source segments in replay order, each
-          // with its own consecutive-dup elision; a sentinel-only segment
-          // still runs (empty) so its per-entry loop stays observable
-          val segs = ArrayBuffer[(Long, ArrayBuffer[TrailEvent])]()
-          var prev: Row = null
-          while (rows.hasNext) {
-            val cur = rows.next()
-            val src = if (hasSrc) cur.getLong(2) else 0L
-            if (segs.isEmpty || segs.last._1 != src) { segs += ((src, ArrayBuffer())); prev = null }
-            if (ghostIdx < 0 || cur.getInt(ghostIdx) != 1) {
-              val dup = prev != null && prev.getLong(1) == cur.getLong(1) && {
-                var i = fieldBase; var same = true
-                while (same && i < fieldBase + nDedup) { same = rowField(prev, i) == rowField(cur, i); i += 1 }
-                same
-              }
-              if (!dup) {
-                val arr = new Array[String](fieldIdxInRow.length)
-                var i = 0
-                while (i < arr.length) {
-                  arr(i) = if (fieldIdxInRow(i) == -1) "" else rowField(cur, fieldIdxInRow(i))
-                  i += 1
-                }
-                segs.last._2 += new TrailEvent(cur.getLong(1), arr)
-                prev = cur
-              }
-            }
-          }
-
           val buf = ArrayBuffer[Row]()
-          def emitAs(ctxCookie: String)(j: Int, r: Results): Unit = {
-            // O(1) skip for identity results: a wide foreach broadcasts one
-            // scratch to thousands of absent-value tuples that yielded
-            // nothing — iterating four empty/zero maps per tuple was
-            // measurable at 10k-tuple cardinality
-            if (!r.touched) return
-            r.counters.foreach { case (d, v) =>
-              if (v != 0) buf += Row(ctxCookie, j, "c", d, null, v)
-            }
-            r.sets.foreach { case (d, m) =>
-              m.foreach { case (t, c) => buf += Row(ctxCookie, j, "s", d, t, c) }
-            }
-            r.msets.foreach { case (d, m) =>
-              m.foreach { case (t, c) => buf += Row(ctxCookie, j, "m", d, t, c) }
-            }
-            r.hlls.foreach { case (d, h) =>
-              // emit the trail-local sketch registers; merged upstream
-              buf += Row(ctxCookie, j, "h", d, h.registers, 1L)
-            }
-          }
-
           // ONE shared initial state for all tuples: processTrail never
           // mutates saved entries (runOne copies first) and groups aliases
           // with an identity fast path — per-tuple initial allocation was
           // pure overhead at wide foreach cardinalities
           val init = FsmState.initial(prog)
           var carried = Array.fill(ts.length)(init)
-          for ((src, seg) <- segs) {
+          for ((src, seg) <- pass.segments(rows)) {
             // single-source runs carry no cuts (src tag 0, cuts empty); a
             // TAGGED source beyond the cuts array means the caller lost the
             // unionSources cuts — silently treating it as uncut would
@@ -346,15 +271,175 @@ object TrailEngine {
                 s"source index $src has no min_ts cut (${cuts.length} cuts) — " +
                   "pass unionSources' cuts through srcCuts")
             carried = TrailMatcher.replaySegment(
-              prog, ts, carried, seg.toArray, entriesOpt.get, cut, params, fcalls, emitAs)
+              prog, ts, carried, seg, entriesOpt.get, cut, params, fcalls, encode(buf, _))
           }
           // one finalization per cookie, ctx = the real cookie
           // (reference: :899-944 iterates the cookie-keyed states map)
-          TrailMatcher.finalizeTrail(prog, ts, carried, uuid, params, fcalls, emitAs(uuid))
+          TrailMatcher.finalizeTrail(prog, ts, carried, uuid, params, fcalls, encode(buf, uuid))
           buf.iterator
         }
       }(Encoders.row(emitSchema))
       .toDF()
+  }
+
+  /** The per-trail projection [[emits]] and TrailStream read: `__uuid`,
+    * `__ts` (long seconds), `__srcord` (multi-source runs), every other
+    * column cast to string, `__tb<i>` tiebreaks, `__ghost` (sentinel-bearing
+    * frames) — plus the [[TrailPass]] that turns one trail's rows of it
+    * into events.
+    *
+    * Every non-reserved column joins the consecutive-dup compare: by
+    * reference semantics dedup uses the full input row (src/ctx.c:112-131).
+    * The src column is projected separately AS A NUMBER (a string cast
+    * would order source 10 before 2) and stays out of the compare —
+    * per-source segmentation already prevents cross-boundary elision.
+    * Tiebreak columns keep their ORIGINAL types in dedicated sort columns:
+    * a numeric tiebreak sorted lexically would order "10" before "9" under
+    * equal ts. `__ghost` marks zero-event presence sentinels
+    * ([[withPresenceSentinels]]).
+    */
+  private[graft] def trailProjection(
+      prog: CompiledProgram,
+      events: DataFrame,
+      uuidCol: String,
+      tsCol: String,
+      tiebreak: Seq[String] = Nil,
+      srcCol: Option[String] = None,
+  ): (DataFrame, TrailPass) = {
+    val hasGhost = events.columns.contains("__ghost")
+    val reserved = (Seq(uuidCol, tsCol) ++ srcCol ++ (if (hasGhost) Seq("__ghost") else Nil)).toSet
+    val dedupCols = events.columns.filterNot(reserved).toSeq
+    val srcSel: Seq[Column] = srcCol.map(c => col(c).cast(LongType).as("__srcord")).toSeq
+    val tbSel: Seq[Column] = tiebreak.zipWithIndex.map { case (c, i) => col(c).as(s"__tb$i") }
+    val ghostSel: Seq[Column] =
+      if (hasGhost) Seq(col("__ghost").cast(IntegerType).as("__ghost")) else Nil
+    val projected = events.select(
+      (col(uuidCol).cast(StringType).as("__uuid") +:
+        graft.Tables.tsLong(events, tsCol).as("__ts") +:
+        srcSel) ++
+        dedupCols.map(c => col(c).cast(StringType).as(c)) ++ tbSel ++ ghostSel: _*
+    )
+    val fieldBase = 2 + srcSel.length
+    val fieldIdx = prog.fields.map { f =>
+      val i = dedupCols.indexOf(f)
+      if (i >= 0) i + fieldBase else -1
+    }
+    val ghostIdx = if (hasGhost) fieldBase + dedupCols.length + tiebreak.length else -1
+    (projected, TrailPass(fieldIdx, fieldBase, fieldBase + dedupCols.length, srcCol.isDefined, ghostIdx))
+  }
+
+  /** Row positions of a [[trailProjection]]: program fields (`-1` reads
+    * as ""), the dedup column range, the src and ghost columns.
+    */
+  private[graft] final case class TrailPass(
+      fieldIdx: Array[Int], dedupFrom: Int, dedupUntil: Int, hasSrc: Boolean, ghostIdx: Int) {
+
+    private def field(r: Row, i: Int): String = {
+      val v = r.get(i); if (v == null) "" else v.toString
+    }
+
+    /** One pass over a trail's rows in replay order: source segments in
+      * order, each with its own consecutive-dup elision over the dedup
+      * columns (null ≡ "", like LocalRunner). `__ghost` sentinels are
+      * skipped, but a sentinel-only segment still appears (empty) so its
+      * per-entry loop stays observable.
+      */
+    def segments(rows: Iterator[Row]): ArrayBuffer[(Long, Array[TrailEvent])] = {
+      val segs = ArrayBuffer[(Long, ArrayBuffer[TrailEvent])]()
+      var prev: Row = null
+      while (rows.hasNext) {
+        val cur = rows.next()
+        val src = if (hasSrc) cur.getLong(2) else 0L
+        if (segs.isEmpty || segs.last._1 != src) { segs += ((src, ArrayBuffer())); prev = null }
+        if (ghostIdx < 0 || cur.getInt(ghostIdx) != 1) {
+          val dup = prev != null && prev.getLong(1) == cur.getLong(1) && {
+            var i = dedupFrom; var same = true
+            while (same && i < dedupUntil) { same = field(prev, i) == field(cur, i); i += 1 }
+            same
+          }
+          if (!dup) {
+            val arr = new Array[String](fieldIdx.length)
+            var i = 0
+            while (i < arr.length) {
+              arr(i) = if (fieldIdx(i) == -1) "" else field(cur, fieldIdx(i))
+              i += 1
+            }
+            segs.last._2 += new TrailEvent(cur.getLong(1), arr)
+            prev = cur
+          }
+        }
+      }
+      segs.map { case (src, evs) => (src, evs.toArray) }
+    }
+  }
+
+  /** The emit-row encoder: appends the yields `r` holds for foreach tuple
+    * `j` to `buf` as [[emitSchema]] rows keyed by `ctxId` — counters as
+    * (`c`, dst, null, count), set and multiset items as (`s`/`m`, dst,
+    * encoded tuple, count), HLL sketches as (`h`, dst, registers, 1).
+    */
+  private[graft] def encode(buf: ArrayBuffer[Row], ctxId: String)(j: Int, r: Results): Unit = {
+    // O(1) skip for identity results: a wide foreach broadcasts one
+    // scratch to thousands of absent-value tuples that yielded nothing —
+    // iterating four empty/zero maps per tuple was measurable at
+    // 10k-tuple cardinality
+    if (!r.touched) return
+    r.counters.foreach { case (d, v) => if (v != 0) buf += Row(ctxId, j, "c", d, null, v) }
+    r.sets.foreach { case (d, m) => m.foreach { case (t, c) => buf += Row(ctxId, j, "s", d, t, c) } }
+    r.msets.foreach { case (d, m) => m.foreach { case (t, c) => buf += Row(ctxId, j, "m", d, t, c) } }
+    r.hlls.foreach { case (d, h) => buf += Row(ctxId, j, "h", d, h.registers, 1L) }
+  }
+
+  /** Fold emit rows back into reference-shaped results: the monoid add of
+    * the reference's match_add_results (src/match_traildb.c:402-406) as
+    * Spark aggregations whose partial map-side combine keeps the shuffle
+    * O(distinct yields). Counters, sets and multisets are summed in ONE
+    * aggregation (`item` is null for counters). HLL registers are
+    * max-merged in a second one, run only when the program declares an
+    * HLL, because the merge buffer is 16 KiB per group; the emit stream
+    * is cached only when both run. Only the aggregated rows are collected
+    * — O(tuples × result vars [× set cardinality]), never events.
+    */
+  def fold(emitted: DataFrame, prog: CompiledProgram, tuples: Vector[ForeachTuple]): LocalRunner.RunOutput = {
+    val needSums = prog.yieldCounters.nonEmpty || prog.yieldSets.nonEmpty || prog.yieldMultisets.nonEmpty
+    val needHlls = prog.yieldHlls.nonEmpty
+    val em = if (needSums && needHlls) emitted.cache() else emitted
+    val results = Vector.fill(if (prog.mergeResults) 1 else tuples.length)(new Results(prog))
+    def slot(j: Int): Results = {
+      val res = results(if (prog.mergeResults) 0 else j)
+      res.touched = true // direct map writes bypass the emit methods
+      res
+    }
+    if (needSums)
+      (if (needHlls) em.filter(col("kind") =!= "h") else em)
+        .groupBy("tuple_idx", "kind", "dst", "item").agg(sum("n"))
+        .collect()
+        .foreach { r =>
+          val res = slot(r.getInt(0))
+          val dst = r.getString(2)
+          val n = r.getLong(4)
+          r.getString(1) match {
+            case "c" => res.counters.updateWith(dst)(c => Some(c.getOrElse(0L) + n))
+            case kind =>
+              val m = if (kind == "s") res.sets(dst) else res.msets(dst)
+              val item = r.getAs[Array[Byte]](3)
+              m.update(item, m.getOrElse(item, 0L) + n)
+          }
+        }
+    // register-max INTO the slot, never overwrite: with mergeResults every
+    // tuple_idx maps to slot 0, and the per-tuple sketches must union
+    // (reference: match_add_results' hll merge)
+    if (needHlls)
+      em.filter(col("kind") === "h")
+        .groupBy("tuple_idx", "dst")
+        .agg(graft.functions.HllAggregator.trckHllMergeHex(col("item")))
+        .collect()
+        .foreach { r =>
+          val h = Hll.fromHexString(r.getString(2))
+          slot(r.getInt(0)).hlls.updateWith(r.getString(1))(prev => Some(prev.fold(h)(_.merge(h))))
+        }
+    if (em ne emitted) em.unpersist()
+    LocalRunner.RunOutput(prog, tuples, results, prog.mergeResults)
   }
 
   /** Counter results as a DataFrame: (tuple vars…, dst, value), summed

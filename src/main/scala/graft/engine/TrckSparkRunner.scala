@@ -11,9 +11,10 @@ import graft.trck.Fsm.Bindings
 import graft.trck.LocalRunner.ForeachTuple
 
 /** Full trck query execution on Spark: TrailEngine emits → distributed
-  * monoid aggregation (counters sum, set/multiset counts, HLL register
-  * merge) → small per-tuple results collected and rendered in the
-  * reference's output shape (reference: src/results_json.c:233-295).
+  * monoid aggregation (TrailEngine.fold: counters sum, set/multiset
+  * counts, HLL register merge) → small per-tuple results collected and
+  * rendered in the reference's output shape (reference:
+  * src/results_json.c:233-295).
   *
   * The collect is only of FINAL aggregated results — O(tuples × result
   * vars [× set cardinality]) — never of events; everything upstream is
@@ -61,24 +62,6 @@ object TrckSparkRunner {
     }
     df
   }
-
-  /** Union one zero-event `__ghost` sentinel row per trail (per source, for
-    * multi-source runs) present in `presentFrom`, so trails whose events
-    * are all filtered away still reach the engine's per-entry loop and
-    * MAX_TIMESTAMP finalization — the reference iterates DB trails
-    * regardless of how many events survive per-event filters
-    * (src/match_traildb.c:513-560). The engine never materializes sentinels
-    * as events (TrailEngine `__ghost` handling); for trails with surviving
-    * events the extra row is inert. By default presence is judged from the
-    * post-cut events; pass [[unionSourcesWithPresence]]'s frame through
-    * runRaw's `presence` to also cover a source whose events all fall
-    * below its min_ts cut (the reference still runs that DB's empty
-    * per-entry loop).
-    */
-  private def withSentinels(
-      real: DataFrame, presentFrom: DataFrame, uuidCol: String, tsCol: String): DataFrame =
-    TrailEngine.withPresenceSentinels(real, presentFrom, uuidCol, tsCol,
-      srcCol = if (presentFrom.columns.contains("__src")) Some("__src") else None)
 
   /** Widen a row predicate so `__ghost=1` presence sentinels survive it:
     * sentinel rows carry null fields and ts 0, so any CNF/bounds predicate
@@ -233,19 +216,13 @@ object TrckSparkRunner {
     val presentBase = presence
       .map(p => applyFilters(p, uuidCol, tsCol, filters.copy(cnf = None)))
       .getOrElse(afterExclude)
-    val tuples: Vector[ForeachTuple] =
-      if (prog.groupbyVars.isEmpty) Vector(ForeachTuple(Vector.empty))
-      else
-        foreachTuples.getOrElse {
-          require(prog.groupbyVars.size == 1, "implicit foreach requires exactly one var")
-          val field = prog.varFields(prog.groupbyVars.head)
-          // lexicon sweep over the UNfiltered input: the reference reads the
-          // DB lexicon, not the filtered event stream
-          // (src/match_traildb.c:188-236; LocalRunner matches). Guarded
-          // against high-cardinality fields (TrailEngine.lexiconSweep).
-          val values = TrailEngine.lexiconSweep(lexiconEvents.getOrElse(events), field)
-          ("" +: values).map(v => ForeachTuple(Vector(Left(v))))
-        }
+    // lexicon sweep over the UNfiltered input: the reference reads the DB
+    // lexicon, not the filtered event stream (src/match_traildb.c:188-236;
+    // LocalRunner matches)
+    val tuples = TrailEngine.resolveTuples(prog, foreachTuples, lexiconEvents.getOrElse(events))
+    val srcCol = if (events.columns.contains("__src")) Some("__src") else None
+    require(srcCol.isEmpty || srcCuts.nonEmpty,
+      "multi-source events (__src column) need the unionSources cuts passed as srcCuts")
 
     // F2 window file: drop unlisted trails AND events outside every window
     // of their cookie before the shuffle (broadcast join on per-cookie
@@ -286,7 +263,7 @@ object TrckSparkRunner {
         else {
           val listed = presentBase
             .join(broadcast(bounds.select(uuidCol)), Seq(uuidCol), "left_semi")
-          (withSentinels(joined, listed, uuidCol, tsCol), Some(ws.entries))
+          (TrailEngine.withPresenceSentinels(joined, listed, uuidCol, tsCol, srcCol), Some(ws.entries))
         }
       case None =>
         // Without windows the empty-trail run is observable only when the
@@ -295,69 +272,12 @@ object TrckSparkRunner {
         // common path sentinel-free (no extra distinct pass at scale).
         if (hasGhostCol) (filtered, None)
         else if (TrailMatcher.emptyRunMutates(prog))
-          (withSentinels(filtered, presentBase, uuidCol, tsCol), None)
+          (TrailEngine.withPresenceSentinels(filtered, presentBase, uuidCol, tsCol, srcCol), None)
         else (filtered, None)
     }
 
-    val srcCol = if (events.columns.contains("__src")) Some("__src") else None
-    require(srcCol.isEmpty || srcCuts.nonEmpty,
-      "multi-source events (__src column) need the unionSources cuts passed as srcCuts")
-    // one aggregation pass per DECLARED yield family — most programs only
-    // count, so they get a single job; the emit stream is cached only when
-    // more than one family will traverse it
-    val needCounters = prog.yieldCounters.nonEmpty
-    val needSets = prog.yieldSets.nonEmpty || prog.yieldMultisets.nonEmpty
-    val needHlls = prog.yieldHlls.nonEmpty
-    val nPasses = Seq(needCounters, needSets, needHlls).count(identity)
-    val em0 = TrailEngine
-      .emits(prog, trailDf, uuidCol, tsCol, tiebreak, params, Some(tuples), fcalls,
-        winEntries, srcCol, srcCuts)
-    val em = if (nPasses > 1) em0.cache() else em0
-
-    val nSlots = if (prog.mergeResults) 1 else tuples.length
-    val results = Vector.fill(nSlots)(new Results(prog))
-    def slotIdx(i: Int) = if (prog.mergeResults) 0 else i
-
-    // counters
-    if (needCounters)
-      em.filter(col("kind") === "c")
-        .groupBy("tuple_idx", "dst").agg(sum("n").as("v"))
-        .collect()
-        .foreach { r =>
-          val res = results(slotIdx(r.getInt(0)))
-          res.touched = true // direct map writes bypass the emit methods
-          res.counters.updateWith(r.getString(1))(c => Some(c.getOrElse(0L) + r.getLong(2)))
-        }
-    // sets + multisets: distinct encoded tuples with counts
-    if (needSets)
-      em.filter(col("kind").isin("s", "m"))
-        .groupBy("tuple_idx", "kind", "dst", "item").agg(sum("n").as("v"))
-        .collect()
-        .foreach { r =>
-          val res = results(slotIdx(r.getInt(0)))
-          res.touched = true // direct map writes bypass the emit methods
-          val m = if (r.getString(1) == "s") res.sets(r.getString(2)) else res.msets(r.getString(2))
-          val k = r.getAs[Array[Byte]]("item")
-          m.update(k, m.getOrElse(k, 0L) + r.getLong(4))
-        }
-    // hlls: merge per-trail register arrays. Register-max INTO the slot,
-    // never overwrite: with mergeResults every tuple_idx maps to slot 0,
-    // and the per-tuple sketches must union (reference: match_add_results'
-    // hll merge) — an update() here kept only whichever tuple's row was
-    // collected last (EngineEquivalenceSpec pins the merged-HLL case).
-    if (needHlls)
-      em.filter(col("kind") === "h")
-        .groupBy("tuple_idx", "dst")
-        .agg(graft.functions.HllAggregator.trckHllMergeHex(col("item")).as("hex"))
-        .collect()
-        .foreach { r =>
-          val res = results(slotIdx(r.getInt(0)))
-          res.touched = true // direct map writes bypass the emit methods
-          val h = Hll.fromHexString(r.getString(2))
-          res.hlls.updateWith(r.getString(1))(prev => Some(prev.fold(h)(_.merge(h))))
-        }
-    if (nPasses > 1) em.unpersist()
-
-    LocalRunner.RunOutput(prog, tuples, results, prog.mergeResults)
+    val em = TrailEngine.emits(prog, trailDf, uuidCol, tsCol, tiebreak, params, Some(tuples), fcalls,
+      winEntries, srcCol, srcCuts)
+    TrailEngine.fold(em, prog, tuples)
   }
 }

@@ -1,9 +1,12 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.engine.TrailEngine
 import graft.trck._
 import graft.trck.Compiled.CompiledProgram
 import graft.trck.Fsm.{Bindings, FsmState, TrailEvent}
@@ -42,39 +45,6 @@ object TrailStream {
   final case class StateData(ri: Int, windowExpires: Long, outerIds: Array[Int], outerExpires: Array[Long])
   final case class TrailState(states: Array[StateData], maxTs: Long)
 
-  /** `fields` is prog.fields-ordered for the FSM; `dedupFields` carries ALL
-    * non-reserved input columns — consecutive-duplicate elision compares the
-    * FULL event (reference: src/ctx.c:112-131; an event differing only in a
-    * column the program never references is NOT a duplicate), exactly like
-    * the batch engine's dedup projection.
-    */
-  final case class InEvent(uuid: String, ts: Long, eventTime: java.sql.Timestamp,
-                           fields: Array[String], dedupFields: Array[String])
-
-  /** `uuid` carries the result ctx id — the window entry id for window
-    * runs, the cookie otherwise — matching the batch engine's emit keying.
-    */
-  final case class EmitRow(uuid: String, tupleIdx: Int, kind: String, dst: String, item: Array[Byte], n: Long)
-
-  /** Consecutive-dup elision over the full projected event (mirrors
-    * Fsm.TrailCtx.dedupConsecutive, but on the WIDE dedup projection — the
-    * FSM-field array is a subset and would elide too much).
-    */
-  private def dedupConsecutiveIn(evs: Array[InEvent]): Array[InEvent] = {
-    if (evs.length < 2) return evs
-    val out = new scala.collection.mutable.ArrayBuffer[InEvent](evs.length)
-    out += evs(0)
-    var i = 1
-    while (i < evs.length) {
-      val a = evs(i - 1); val b = evs(i)
-      val dup = a.ts == b.ts && java.util.Arrays.equals(
-        a.dedupFields.asInstanceOf[Array[AnyRef]], b.dedupFields.asInstanceOf[Array[AnyRef]])
-      if (!dup) out += b
-      i += 1
-    }
-    out.toArray
-  }
-
   private def toData(s: FsmState): StateData =
     StateData(s.ri, s.windowExpires, s.outerIds.clone(), s.outerExpires.clone())
 
@@ -89,7 +59,9 @@ object TrailStream {
 
   /** Wire a streaming events DataFrame (uuidCol, tsCol seconds, program
     * field columns) into the FSM. Returns the stream of emitted yield rows
-    * (same schema as TrailEngine.emits).
+    * in TrailEngine's emit-row schema `(uuid, tuple_idx, kind, dst, item,
+    * n)`, built by the same projection, consecutive-dup pass and encoder
+    * as the batch `TrailEngine.emits`, so `TrailEngine.fold` reads either.
     *
     * Finalization: pass `eventTimeGapSec` (> 0) for watermark-driven
     * event-time finalization — a trail finalizes when the watermark (built
@@ -122,34 +94,24 @@ object TrailStream {
       eventTimeGapSec: Long = 0L,
       watermarkDelay: String = "0 seconds",
       windows: Option[Seq[LocalRunner.WindowEntry]] = None,
-  ): Dataset[EmitRow] = {
+  ): DataFrame = {
     val spark = events.sparkSession
     import spark.implicits._
 
-    val fieldCols = prog.fields.toSeq
-    // every non-reserved column joins the dedup compare (batch-engine
-    // parity); the FSM-field array stays prog.fields-ordered
-    val dedupCols = events.columns.filterNot(Set(uuidCol, tsCol)).toSeq
-    val projectedAll = events
-      .select(
-        col(uuidCol).cast("string").as("uuid"),
-        graft.Tables.tsLong(events, tsCol).as("ts"),
-        timestamp_seconds(graft.Tables.tsLong(events, tsCol)).as("eventTime"),
-        array(fieldCols.map(f =>
-          if (events.columns.contains(f)) coalesce(col(f).cast("string"), lit("")) else lit("")): _*
-        ).as("fields"),
-        array(dedupCols.map(c => col(c).cast("string")): _*).as("dedupFields"),
-      )
+    val (projectedAll, pass) = TrailEngine.trailProjection(prog, events, uuidCol, tsCol)
     // window runs: unlisted trails never reach the stateful operator
     val projected0 = windows match {
       case Some(ws) =>
-        val listed = ws.map(_.cookie).distinct.toDF("uuid")
-        projectedAll.join(broadcast(listed), Seq("uuid"), "left_semi")
+        val listed = ws.map(_.cookie).distinct.toDF("__uuid")
+        projectedAll.join(broadcast(listed), Seq("__uuid"), "left_semi")
       case None => projectedAll
     }
+    // the watermark column goes last: the pass reads rows by position
     val projected =
-      (if (eventTimeGapSec > 0) projected0.withWatermark("eventTime", watermarkDelay)
-       else projected0).as[InEvent]
+      if (eventTimeGapSec > 0)
+        projected0.withColumn("__eventTime", timestamp_seconds(col("__ts")))
+          .withWatermark("__eventTime", watermarkDelay)
+      else projected0
 
     val winByCookie: Option[Map[String, IndexedSeq[LocalRunner.WindowEntry]]] =
       windows.map(_.groupBy(_.cookie).view.mapValues(_.toIndexedSeq).toMap)
@@ -166,27 +128,16 @@ object TrailStream {
       else GroupStateTimeout.NoTimeout()
 
     projected
-      .groupByKey(_.uuid)
+      .groupByKey(_.getString(0))
       .flatMapGroupsWithState(OutputMode.Append(), timeoutMode)(
-        (uuid: String, rows: Iterator[InEvent], state: GroupState[TrailState]) => {
-          val buf = scala.collection.mutable.ArrayBuffer[EmitRow]()
-
-          // emit rows carry the result ctx id: the window ENTRY id inside an
-          // entry's run (batch parity — TrailEngine emits per entry id), the
-          // cookie otherwise (including finalization, like LocalRunner's
-          // per-cookie finalizeTrail)
-          def emit(ctxId: String)(j: Int, r: Results): Unit = {
-            r.counters.foreach { case (d, v) => if (v != 0) buf += EmitRow(ctxId, j, "c", d, null, v) }
-            r.sets.foreach { case (d, m) => m.foreach { case (t, c) => buf += EmitRow(ctxId, j, "s", d, t, c) } }
-            r.msets.foreach { case (d, m) => m.foreach { case (t, c) => buf += EmitRow(ctxId, j, "m", d, t, c) } }
-            r.hlls.foreach { case (d, h) => buf += EmitRow(ctxId, j, "h", d, h.registers, 1L) }
-          }
-
+        (uuid: String, rows: Iterator[Row], state: GroupState[TrailState]) => {
+          val buf = ArrayBuffer[Row]()
           if (state.hasTimedOut) {
             // end-of-input analog: MAX_TIMESTAMP finalization, state dropped
             state.getOption.foreach { ts0 =>
               val sts = ts0.states.map(fromData(_, prog.nWindowRules))
-              TrailMatcher.finalizeTrail(prog, tuples, sts, uuid, params, fcalls, emit(uuid))
+              TrailMatcher.finalizeTrail(
+                prog, tuples, sts, uuid, params, fcalls, TrailEngine.encode(buf, uuid))
             }
             state.remove()
           } else {
@@ -196,16 +147,19 @@ object TrailStream {
             // per-entry replay with the high-water mark as the min_ts cut —
             // every entry starts from the state the previous batch left, the
             // LAST entry's output carries forward, and the cut folds into
-            // each ctx's window start (Y5 yields render it, not 0)
-            val trail = dedupConsecutiveIn(rows.toArray.sortBy(_.ts))
-              .map(e => new TrailEvent(e.ts, e.fields))
+            // each ctx's window start (Y5 yields render it, not 0). Emit
+            // rows carry the entry id inside an entry's run and the cookie
+            // at finalization, like the batch engine.
+            val sorted = rows.toArray.sortBy(_.getLong(1))
+            // no src column: the whole batch is one segment
+            val trail = pass.segments(sorted.iterator).headOption.fold(Array.empty[TrailEvent])(_._2)
             val entries = winByCookie match {
               case Some(m) => m.getOrElse(uuid, IndexedSeq.empty)
               case None    => IndexedSeq(LocalRunner.WindowEntry(uuid, uuid, 0L, 0L))
             }
             val saved = prev.states.map(fromData(_, prog.nWindowRules))
             val out = TrailMatcher.replaySegment(
-              prog, tuples, saved, trail, entries, prev.maxTs, params, fcalls, emit)
+              prog, tuples, saved, trail, entries, prev.maxTs, params, fcalls, TrailEngine.encode(buf, _))
             val newMax = if (trail.isEmpty) prev.maxTs else math.max(prev.maxTs, trail.last.ts)
             state.update(TrailState(out.map(toData), newMax))
             if (eventTimeGapSec > 0)
@@ -217,7 +171,7 @@ object TrailStream {
           }
           buf.iterator
         }
-      )
+      )(implicitly[Encoder[TrailState]], Encoders.row(TrailEngine.emitSchema))
   }
 
   /** Streaming face of the A4 HLL yield: per-group trck-format distinct

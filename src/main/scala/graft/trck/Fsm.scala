@@ -113,22 +113,6 @@ object Fsm {
   }
 
   object TrailCtx {
-    /** Drop events identical (ts + all fields) to their predecessor. */
-    def dedupConsecutive(events: Array[TrailEvent]): Array[TrailEvent] = {
-      if (events.length < 2) return events
-      val out = new scala.collection.mutable.ArrayBuffer[TrailEvent](events.length)
-      out += events(0)
-      var i = 1
-      while (i < events.length) {
-        val a = events(i - 1); val b = events(i)
-        val dup = a.ts == b.ts && java.util.Arrays.equals(
-          a.fields.asInstanceOf[Array[AnyRef]], b.fields.asInstanceOf[Array[AnyRef]])
-        if (!dup) out += b
-        i += 1
-      }
-      out.toArray
-    }
-
     def finalization(cookie: String): TrailCtx =
       new TrailCtx(cookie, Array(new TrailEvent(MaxTimestamp, null)))
   }

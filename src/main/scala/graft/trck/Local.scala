@@ -75,27 +75,6 @@ final class Results(prog: CompiledProgram) extends Emitter {
     }
   }
 
-  /** Merge `other` n times (reference: add_results_vec — same result applied
-    * to a run of equal-state tuples).
-    */
-  def mergeTimes(other: Results, n: Int): Unit = {
-    if (!other.touched) return // identity — nothing to add
-    touched = true
-    other.counters.foreach { case (k, v) => counters(k) = counters(k) + v * n }
-    other.sets.foreach { case (k, m) =>
-      val dst = sets(k); m.foreach { case (t, c) => dst.update(t, dst.getOrElse(t, 0L) + c * n) }
-    }
-    other.msets.foreach { case (k, m) =>
-      val dst = msets(k); m.foreach { case (t, c) => dst.update(t, dst.getOrElse(t, 0L) + c * n) }
-    }
-    other.hlls.foreach { case (k, h) =>
-      hlls.get(k) match {
-        case Some(mine) => mine.merge(h)
-        case None       => hlls.update(k, Hll.fromHexString(h.toHexString))
-      }
-    }
-  }
-
   /** JSON-able map replicating results_json keys/values: `$c` → long,
     * `#s` → sorted array of rendered tuples, `&m` → {rendered: count},
     * `^h` → RLE-hex sketch (reference: src/results_json.c:233-295,

@@ -110,6 +110,65 @@ class EngineEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
     preparedDf.unpersist()
   }
 
+  test("runRaw folds counter and set yields in one merge aggregation, with no cache") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val prog = Compiled.compile(Ir.Program(Vector(
+      Ir.Rule(None, None, None, entrypoint = false, List(
+        Ir.Clause(Map("type" -> List("cli")), negated = false, Some("repeat"),
+          List(Ir.Yield("$clicks", Nil), Ir.Yield("#eids", List(Ir.FieldTerm("advertisable_eid"))))),
+        Ir.Clause(Map.empty, negated = false, Some("repeat"), Nil)), None)), None))
+    val db = randomDb(5L, nTrails = 20, nEvents = 15)
+    val df = dbToDf(db)
+
+    // every SQL execution's physical plan, in submission order; a marker
+    // query after runRaw shows when the async bus has delivered its events
+    val marker = "fold-probe-marker"
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          plans.add(if (s.description.contains(marker)) marker else s.physicalPlanDescription)
+        case _ =>
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val out =
+      try {
+        val out = TrckSparkRunner.runRaw(prog, df, "uuid", "ts", Seq("seq"))
+        spark.sparkContext.setJobDescription(marker)
+        spark.range(1).collect()
+        spark.sparkContext.setJobDescription(null)
+        val deadline = System.nanoTime() + 30L * 1000000000L
+        while (!plans.contains(marker) && System.nanoTime() < deadline) Thread.sleep(10)
+        out
+      } finally spark.sparkContext.removeSparkListener(listener)
+
+    import scala.jdk.CollectionConverters._
+    val merges = plans.asScala.takeWhile(_ != marker).toSeq
+    assert(plans.contains(marker), "the marker query never reached the listener")
+    assert(merges.length == 1, s"expected one merge aggregation, got ${merges.length}:\n${merges.mkString("\n")}")
+    assert(merges.head.contains("HashAggregate"), merges.head)
+    assert(!merges.head.contains("InMemory"), s"the fold must not cache:\n${merges.head}")
+    val local = LocalRunner.run(prog, Seq(db))
+    assert(OutputJson.render(out.toOutputs, false) == OutputJson.render(local.toOutputs, false))
+  }
+
+  test("TrailStream.emits has the schema of TrailEngine.emits") {
+    val s = spark
+    import s.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val prog = Compiled.compile(program)
+    val tuples = eids.map(e => ForeachTuple(Vector(Left(e))))
+    val batch = TrailEngine.emits(prog, dbToDf(randomDb(3L, 2, 3)), "uuid", "ts", Seq("seq"),
+      foreachTuples = Some(tuples))
+    val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(String, Long, String, String)]
+    val stream = graft.streaming.TrailStream.emits(
+      prog, input.toDF().toDF("uuid", "ts", "type", "advertisable_eid"), "uuid", "ts",
+      foreachTuples = tuples)
+    assert(stream.schema == batch.schema)
+  }
+
   test("bucketed-table layout: prepared emits over a saved bucketed table, no shuffle") {
     val prog = Compiled.compile(program)
     val db = randomDb(88L, nTrails = 30, nEvents = 25)

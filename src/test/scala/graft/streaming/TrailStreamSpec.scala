@@ -146,24 +146,39 @@ class TrailStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
     val s = spark
     import s.implicits._
     implicit val sqlCtx = spark.sqlContext
+    import graft.engine.TrckSparkRunner
+    import graft.trck.LocalRunner
+    import graft.trck.LocalRunner.{Db, RawEvent}
     // count every "click"; the two ts=100 events differ ONLY in a column
     // the program never references — the reference compares the whole item
     // array (src/ctx.c:112-131), so BOTH count; a third truly identical
     // event IS elided
     val prog = Compiled.compile(TrckQueries.countProgram)
+    // u2's two events differ only by null vs "" in that column: a null
+    // field reads as "" everywhere, so they are duplicates to every executor
+    val u2 = Seq[(String, Long, String, String)](("u2", 100L, "click", null), ("u2", 100L, "click", ""))
     val input = MemoryStream[(String, Long, String, String)]
     val events = input.toDF().toDF("uuid", "ts", "event_type", "session_id")
     val query = TrailStream.emits(prog, events, "uuid", "ts")
       .writeStream.format("memory").queryName("fsm_dedup_out").outputMode("append").start()
     try {
-      input.addData(
+      input.addData(Seq(
         ("u1", 100L, "click", "s1"),
         ("u1", 100L, "click", "s2"), // differs only in session_id → kept
         ("u1", 100L, "click", "s2"), // true consecutive duplicate → elided
-        ("u1", 200L, "click", "s2"))
+        ("u1", 200L, "click", "s2")) ++ u2: _*)
       query.processAllAvailable()
-      val n = spark.sql("SELECT sum(n) FROM fsm_dedup_out WHERE kind = 'c'").head.getLong(0)
-      assert(n == 3L, s"expected 3 clicks (dup elided, session-diff kept), got $n")
+      val streamed = spark.sql("SELECT uuid, sum(n) FROM fsm_dedup_out WHERE kind = 'c' GROUP BY uuid")
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      assert(streamed("u1") == 3L, s"expected 3 clicks (dup elided, session-diff kept), got $streamed")
+      // LocalRunner reads a null column as an absent field
+      val local = LocalRunner.run(prog, Seq(Db(Seq("u2" -> u2.map(e =>
+        RawEvent(e._2, Map("event_type" -> e._3) ++ Option(e._4).map("session_id" -> _)))))))
+      val batch = TrckSparkRunner.runRaw(prog, u2.toDF("uuid", "ts", "event_type", "session_id"), "uuid", "ts")
+      val localN = local.results.head.counters("clicks")
+      assert(localN == 1L)
+      assert(batch.results.head.counters("clicks") == localN)
+      assert(streamed("u2") == localN, s"stream $streamed, LocalRunner $localN")
     } finally query.stop()
   }
 
